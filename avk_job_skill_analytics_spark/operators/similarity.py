@@ -41,11 +41,6 @@ def _norm(a: Column) -> Column:
     )
 
 
-def with_norm(df: DataFrame, vec_col: str, out: str = "norm") -> DataFrame:
-    """Precompute L2 norms once (reused across every comparison)."""
-    return df.withColumn(out, _norm(F.col(vec_col)))
-
-
 def l2_normalize(df: DataFrame, vec_col: str, out: str = "unit",
                  norm_col: str = "norm") -> DataFrame:
     """Append the unit-length vector (and its norm) for ``vec_col``.
@@ -644,10 +639,11 @@ def band_sig_structs_np(vec_col: str, dim: int, bands: int,
 
     Bit-identical by construction: per-plane products x_i·s_i are
     exact IEEE doubles either way, and the fold's LEFT-TO-RIGHT
-    summation order is reproduced with ``np.cumsum`` (sequential
-    partial sums — NumPy's pairwise summation applies to reductions,
-    not cumulative ops), so every rounding step matches and every
-    sign bit agrees (verified exactly over the sf0.1 corpus). NULL
+    summation order is reproduced by a running ``acc += x_i·s_i``
+    over the dimensions starting from 0.0 (never a NumPy reduction,
+    whose pairwise summation would reorder the additions), so every
+    rounding step matches and every sign bit agrees (verified exactly
+    over the sf0.1 corpus). NULL
     vectors and length-mismatched vectors sign to 0 for every band,
     exactly like the expression (null-propagated dots fail the
     ``> 0`` test); a NULL ELEMENT inside a vector also signs to 0 —
@@ -680,10 +676,12 @@ def band_sig_structs_np(vec_col: str, dim: int, bands: int,
                 continue
             V[j] = a
             ok[j] = True
-        # exact products, then LEFT-TO-RIGHT ordered partial sums —
-        # the same IEEE rounding sequence as the expression fold
-        prods = V[:, None, :] * S[None, :, :]      # (n, planes, dim)
-        dots = np.cumsum(prods, axis=2)[:, :, -1]  # (n, planes)
+        # exact products folded LEFT-TO-RIGHT from 0.0 — the same IEEE
+        # rounding sequence as the expression fold, in O(n·planes)
+        # memory (no (n, planes, dim) product tensor)
+        dots = np.zeros((n, S.shape[0]))           # (n, planes)
+        for i in range(dim):
+            dots += V[:, i, None] * S[None, :, i]
         bits = (dots > 0) & ok[:, None]
         sigs = bits.reshape(n, bands, rows_per_band).astype(
             np.int64

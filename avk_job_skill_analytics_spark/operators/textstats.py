@@ -1003,14 +1003,16 @@ def repetition_rules(df, id_col: str, text_col: str,
     bit-identical output, but it shuffled ~9x the corpus token mass
     to count runs each document already held locally; measured 8.9 s
     -> 1.7 s warm at sf0.1.) No windows, no UDFs, no driver state."""
+    # the word array IS the width-1 gram array: the chain below
+    # extends _g1 -> _g2 -> ..., and n=1 reads it directly
     w = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
     base = (
-        df.select(F.col(id_col), w.alias("_w"))
-        .filter(F.size("_w") >= 1)
+        df.select(F.col(id_col), w.alias("_g1"))
+        .filter(F.size("_g1") >= 1)
         .select(
             id_col,
-            "_w",
-            F.length(F.concat_ws(" ", F.col("_w")))
+            "_g1",
+            F.length(F.concat_ws(" ", F.col("_g1")))
             .cast("long")
             .alias("total_chars"),
         )
@@ -1103,19 +1105,17 @@ def repetition_rules(df, id_col: str, text_col: str,
     #    the fold (the established HOF re-evaluation discipline).
     all_ns = list(top_ns) + list(dup_ns)
     staged = base
-    prev = "_w"
     for n in range(2, max(all_ns) + 1):
-        length = F.size("_w") - F.lit(n - 1)
+        length = F.size("_g1") - F.lit(n - 1)
         g = F.when(
-            F.size("_w") >= n,
+            F.size("_g1") >= n,
             F.zip_with(
-                F.slice(F.col(prev), 1, length),
-                F.slice(F.col("_w"), F.lit(n), length),
+                F.slice(F.col(f"_g{n - 1}"), 1, length),
+                F.slice(F.col("_g1"), F.lit(n), length),
                 lambda a, b: F.concat(a, F.lit(" "), b),
             ),
         ).otherwise(F.array().cast("array<string>"))
         staged = staged.select("*", g.alias(f"_g{n}"))
-        prev = f"_g{n}"
     per_n = F.transform(
         F.array(*[F.col(f"_g{n}") for n in all_ns]),
         lambda garr: masses(garr),

@@ -18,6 +18,7 @@ pandas); here we centralize the Spark settings that matter for the
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -150,6 +151,7 @@ def tiny_df(spark, rows, schema: str):
 
 
 _SCRATCH_PERSISTED: list = []
+_SCRATCH_LOCK = threading.Lock()
 
 
 def scratch_persist(df, keep: int = 8):
@@ -165,11 +167,19 @@ def scratch_persist(df, keep: int = 8):
     construction: unpersisting a frame that somehow IS still
     referenced only degrades to recomputation, never to wrong
     results. ``keep`` comfortably exceeds the largest number of
-    scratch frames any single query pins at once (3)."""
+    scratch frames any single query pins at once (3).
+
+    Thread-safe: queries running concurrently from several driver
+    threads on one session register under one lock, so the FIFO
+    never holds more than ``keep`` frames and each evicted frame is
+    unpersisted exactly once."""
     df.persist()
-    _SCRATCH_PERSISTED.append(df)
-    while len(_SCRATCH_PERSISTED) > keep:
-        old = _SCRATCH_PERSISTED.pop(0)
+    with _SCRATCH_LOCK:
+        _SCRATCH_PERSISTED.append(df)
+        n_evict = max(len(_SCRATCH_PERSISTED) - keep, 0)
+        evicted = _SCRATCH_PERSISTED[:n_evict]
+        del _SCRATCH_PERSISTED[:n_evict]
+    for old in evicted:
         try:
             old.unpersist()
         except Exception:

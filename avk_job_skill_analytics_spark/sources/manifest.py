@@ -73,13 +73,6 @@ class Manifest:
             F.broadcast(self.loaded()), "file_name", "left_anti"
         )
 
-    def filter_new_rows(self, df: DataFrame,
-                        file_col: str = "_source_file") -> DataFrame:
-        """Row-level variant: keep rows whose provenance file is not in
-        the manifest (pairs with readers' ``with_provenance``)."""
-        manifest = self.loaded().withColumnRenamed("file_name", file_col)
-        return df.join(F.broadcast(manifest), file_col, "left_anti")
-
     def mark_loaded(self, file_names: list[str]) -> None:
         """S7 conditional insert (`IF NOT EXISTS ... INSERT`,
         src/load_sqlserver.py:51-54): append names not already present.

@@ -1,39 +1,55 @@
-"""Layout-generic maintenance for growing ``table/batch=<id>``
-indexes on the shared fsio commit protocol.
+"""One commit-protocol sink for the growing ``table/batch=<id>``
+indexes, on the shared fsio commit protocol.
 
-Both growing-index families (the banded LSH index in
-``minhash_stream`` and the exact prefix-postings index in
-``ssjoin_stream``) persist per-batch artifacts as one
+Six stream families grow an index this way: the banded LSH index
+(``minhash_stream``), BM25 postings (``lexical_stream``), Naive Bayes
+count deltas (``classify_stream``), logistic-regression states
+(``linear_stream``), embedding band postings (``semantic_stream``)
+and exact prefix postings (``ssjoin_stream``). Each persists one
 ``<table>/batch=<id>`` directory per table, committed by a
-``_batch_<id>`` marker, and periodically fold committed batches into
+``_batch_<id>`` marker, and periodically folds committed batches into
 a negative GENERATION partition via the journaled, rename-free
-cutover documented in ``fsio``. The only layout-specific facts are
-the table names and each table's clustering keys — this module
-parameterizes exactly those, so the crash-window guarantees the LSH
-compactor's pytest suite locks down are inherited by every index
-built on it instead of re-implemented per family.
+cutover documented in ``fsio``.
+
+A family is described by its LAYOUT — ``{table: cluster spec}``,
+first table the probe table — plus the work it does per micro-batch.
+:func:`batched_sink` owns every protocol step around that work
+(redelivery short-circuit, legacy stamp, crash recovery, the marker,
+the auto-compaction trigger) and :func:`compact_batched_index` owns
+the cutover, so the crash-window guarantees the LSH suite locks down
+hold for every family from one implementation.
 """
 
 from __future__ import annotations
 
 from .fsio import (
+    MARKER,
     IndexFS,
     committed_batch_ids,
     count_committed_files,
     drop_stale_generations,
     ensure_protocol,
+    legacy_overlay_ids,
     next_generation,
+    recover_compaction,
     retire_real_markers,
     write_journal,
 )
 
 __all__ = [
+    "batched_sink",
     "make_delete_batches",
     "committed_table_dirs",
+    "served_table_dirs",
     "compact_batched_index",
     "spread_batch",
     "parallel_writes",
 ]
+
+# files per table in a compacted generation
+COMPACT_BUCKETS = 1
+# real batch markers kept behind the newest one (fsio.retire_real_markers)
+MARKER_HORIZON = 1000
 
 
 def parallel_writes(*thunks) -> None:
@@ -101,6 +117,21 @@ def make_delete_batches(tables: tuple[str, ...]):
     return _delete
 
 
+def _legacy_probes(fs: IndexFS, probe: str):
+    """(legacy_gen_probe, batch_dir_probe) for ``fsio``'s pre-v2
+    migration: the ``batch=-1`` sentinel and the batch directories of
+    the probe table."""
+    return (lambda: fs.is_dir(f"{probe}/batch=-1"),
+            lambda b: fs.is_dir(f"{probe}/batch={b}"))
+
+
+def _recover(fs: IndexFS, tables: tuple[str, ...]) -> None:
+    """Writer prologue, idempotent: stamp the protocol (adopting a
+    pre-v2 sentinel) and finish any journal-committed compaction."""
+    ensure_protocol(fs, *_legacy_probes(fs, tables[0]))
+    recover_compaction(fs, make_delete_batches(tables))
+
+
 def committed_table_dirs(fs: IndexFS, table: str,
                          committed: set[str] | None = None
                          ) -> list[str]:
@@ -120,46 +151,98 @@ def committed_table_dirs(fs: IndexFS, table: str,
     ]
 
 
-def compact_batched_index(spark, index_dir: str,
-                          cluster_cols: dict,
-                          buckets: int = 1,
-                          marker_horizon: int = 1000,
-                          probes=None) -> dict:
+def served_table_dirs(fs: IndexFS, layout: dict) -> dict[str, list[str]]:
+    """READ-ONLY committed view for serving paths: each layout table's
+    committed directories, with a pre-v2 root's legacy sentinel
+    overlaid (``fsio.legacy_overlay_ids``) instead of stamped —
+    serving never writes to the index root."""
+    probe = next(iter(layout))
+    committed = committed_batch_ids(fs) | legacy_overlay_ids(
+        fs, *_legacy_probes(fs, probe)
+    )
+    return {t: committed_table_dirs(fs, t, committed) for t in layout}
+
+
+def batched_sink(index_dir: str, layout: dict, write_batch,
+                 compact_every: int | None = None):
+    """The ``foreachBatch`` body of every growing-index family: the
+    exactly-once commit protocol around the family's own work.
+
+    ``write_batch(bdf, batch_id, fs, committed)`` computes batch
+    ``batch_id``'s artifacts against the COMMITTED view (``committed``
+    is one resolution of ``fsio.committed_batch_ids``, shared by every
+    read of the trigger) and writes each into its own
+    ``<table>/batch=<batch_id>`` directory with mode("overwrite").
+    Around it, in order:
+
+    1. a present ``_batch_<id>`` marker short-circuits a clean
+       redelivery entirely;
+    2. the writer prologue stamps the protocol (pre-v2 migration
+       probes on the layout's first table) and finishes any
+       journal-committed compaction left by a crash;
+    3. ``write_batch`` runs — a crash anywhere inside it leaves
+       uncommitted directories that the redelivered batch rewrites
+       with identical content (it never sees them in its own view);
+    4. the marker is touched: the batch's commit point;
+    5. with ``compact_every`` set, once the probe table's committed
+       REAL-batch directories reach that count, the sink folds them
+       via :func:`compact_batched_index` (bounded amortized
+       maintenance, no operator involvement).
+
+    All index I/O goes through ``fsio.IndexFS``, so the root may be
+    file:/hdfs:/s3a:."""
+    tables = tuple(layout)
+
+    def sink(bdf, batch_id: int) -> None:
+        spark = bdf.sparkSession
+        fs = IndexFS(spark, index_dir)
+        if fs.exists(f"{MARKER}{batch_id}"):
+            return
+        _recover(fs, tables)
+        committed = committed_batch_ids(fs)
+        write_batch(bdf, batch_id, fs, committed)
+        fs.touch(f"{MARKER}{batch_id}")
+        if compact_every:
+            # single writer: the prior resolution plus this batch is
+            # the committed set now
+            real = {b for b in committed if not b.startswith("-")}
+            real.add(str(batch_id))
+            n_real = len(committed_table_dirs(fs, tables[0], real))
+            if n_real >= compact_every:
+                compact_batched_index(spark, index_dir, layout)
+
+    return sink
+
+
+def compact_batched_index(spark, index_dir: str, layout: dict) -> dict:
     """Fold every COMMITTED ``batch=<id>`` directory into one fresh
     generation partition per table — the file-count bound that keeps
     a growing index's per-trigger listing from degrading as batches
     accumulate.
 
-    ``cluster_cols`` maps table name -> how to lay out the compacted
+    ``layout`` maps table name -> how to lay out the compacted
     generation: a list of join-key columns to hash-cluster on, None
     for a plain repartition, or a CALLABLE ``fn(df, buckets) -> df``
     for layouts the two simple forms can't express (an associative
-    SUM-merge, a sortWithinPartitions for row-group pruning). The
-    FIRST table is the probe table (file counts, legacy sentinel
-    detection, row count — counted AFTER the transform, so a merging
-    compactor reports merged rows). ``probes`` optionally overrides
-    the legacy-detection pair passed to ``ensure_protocol``
-    (defaults to the standard ``<probe>/batch=-1`` sentinel probes).
-    The cutover is the journaled rename-free protocol of ``fsio``:
-    write the generation directly at its final
+    SUM-merge, a sortWithinPartitions for row-group pruning); each
+    table lands in ``COMPACT_BUCKETS`` files. The FIRST table is the
+    probe table (file counts, legacy sentinel detection, row count —
+    counted AFTER the transform, so a merging compactor reports
+    merged rows). The cutover is the journaled rename-free protocol
+    of ``fsio``: write the generation directly at its final
     (invisible-until-committed) path, publish the journal atomically,
     apply idempotently — every crash window recovers via
     ``recover_compaction``, consumed data survives one tombstone
     grace cycle for in-flight readers, and real batch markers persist
-    so redelivered batches still short-circuit. Returns
-    {'files_before', 'files_after', 'rows'} for the probe table,
-    counted over the COMMITTED view."""
-    from .fsio import recover_compaction
-
-    tables = tuple(cluster_cols)
+    (up to ``MARKER_HORIZON`` behind the newest) so redelivered
+    batches still short-circuit. Returns {'files_before',
+    'files_after', 'rows'} for the probe table, counted over the
+    COMMITTED view."""
+    tables = tuple(layout)
     probe = tables[0]
     delete_fn = make_delete_batches(tables)
     fs = IndexFS(spark, index_dir)
-    if probes is None:
-        probes = (lambda: fs.is_dir(f"{probe}/batch=-1"),
-                  lambda b: fs.is_dir(f"{probe}/batch={b}"))
-    ensure_protocol(fs, *probes)
-    recover_compaction(fs, delete_fn)
+    _recover(fs, tables)
     # reclaim half-written generations from a pre-commit crash
     stale = [
         int(name.split("=", 1)[1])
@@ -179,13 +262,13 @@ def compact_batched_index(spark, index_dir: str,
     consumed: set[str] = set()
     for t in tables:
         df = spark.read.parquet(*dirs[t])
-        spec = cluster_cols[t]
+        spec = layout[t]
         if callable(spec):
-            rep = spec(df, buckets)
+            rep = spec(df, COMPACT_BUCKETS)
         elif spec:
-            rep = df.repartition(buckets, *spec)
+            rep = df.repartition(COMPACT_BUCKETS, *spec)
         else:
-            rep = df.repartition(buckets)
+            rep = df.repartition(COMPACT_BUCKETS)
         obs = None
         if t == probe:
             # observe the row count INSIDE the write job: a separate
@@ -202,8 +285,8 @@ def compact_batched_index(spark, index_dir: str,
             rows = obs.get["rows"]
         consumed |= {d.rsplit("=", 1)[1] for d in dirs[t]}
     write_journal(fs, gen, sorted(consumed))  # the atomic commit point
-    recover_compaction(fs, delete_fn)  # apply via the idempotent path
-    retire_real_markers(fs, marker_horizon)
+    _recover(fs, tables)  # apply via the idempotent recovery path
+    retire_real_markers(fs, MARKER_HORIZON)
     return {
         "files_before": before,
         "files_after": count_committed_files(fs, probe),

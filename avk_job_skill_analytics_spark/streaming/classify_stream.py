@@ -13,9 +13,9 @@ The model's sufficient statistics are per-term integer count pairs
   aggregate, so the served weight table is bit-identical to batch
   training over the union of arrivals;
 - compaction folds committed delta partitions into one summed
-  generation — same journaled rename-free tombstone-graced protocol,
-  but the generation holds ``SUM(deltas)``, not their concatenation,
-  and serving is invariant because integer addition is associative.
+  generation — the shared ``batched_index`` cutover, but the
+  generation holds ``SUM(deltas)``, not their concatenation, and
+  serving is invariant because integer addition is associative.
 
 This closes the classifier lifecycle the way the ANN family closed
 retrieval's: train incrementally (here), gate at ingest
@@ -29,13 +29,12 @@ from pyspark.sql import functions as F
 
 from ..operators.classify import _llr_fp
 from ..operators.textstats import tokens
-from .fsio import (
-    IndexFS,
-    committed_batch_ids,
-    ensure_protocol,
-    legacy_overlay_ids,
-    recover_compaction,
+from .batched_index import (
+    batched_sink,
+    compact_batched_index,
+    served_table_dirs,
 )
+from .fsio import IndexFS
 
 __all__ = [
     "foreach_batch_nb_train",
@@ -44,25 +43,22 @@ __all__ = [
 ]
 
 
-def _delete_nb_batches(fs, bs: list[str]) -> None:
-    for b in bs:
-        fs.delete(f"counts/batch={b}")
-
-
-def _probes(fs):
+def _sum_merge(df, buckets):
+    """Compacted generation = per-term SUM of the consumed deltas
+    (localCheckpoint-ed so the row count and the write share one
+    computation)."""
     return (
-        lambda: fs.is_dir("counts/batch=-1"),
-        lambda b: fs.is_dir(f"counts/batch={b}"),
+        df.groupBy("term")
+        .agg(
+            F.sum("c1").cast("long").alias("c1"),
+            F.sum("c0").cast("long").alias("c0"),
+        )
+        .repartition(buckets)
+        .localCheckpoint()
     )
 
 
-def _committed_count_dirs(fs, committed: set[str]) -> list[str]:
-    return [
-        fs.uri(f"counts/{name}")
-        for name in fs.listdir("counts")
-        if name.startswith("batch=")
-        and name.split("=", 1)[1] in committed
-    ]
+LAYOUT = {"counts": _sum_merge}
 
 
 def _batch_deltas(bdf: DataFrame, id_col: str, text_col: str,
@@ -81,33 +77,16 @@ def _batch_deltas(bdf: DataFrame, id_col: str, text_col: str,
 def _nb_train_batch_fn(index_dir: str, id_col: str, text_col: str,
                        label_col: str,
                        compact_every: int | None = None):
-    """Per-batch training body, exposed for redelivery tests."""
+    """Per-batch training body, exposed for redelivery tests:
+    ``batched_index.batched_sink`` around writing the batch's deltas
+    to ``counts/batch=<id>``."""
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        spark = bdf.sparkSession
-        fs = IndexFS(spark, index_dir)
-        if fs.exists(f"_batch_{batch_id}"):
-            return
-        ensure_protocol(fs, *_probes(fs))
-        recover_compaction(fs, _delete_nb_batches)
-        deltas = _batch_deltas(bdf, id_col, text_col, label_col)
-        deltas.write.mode("overwrite").parquet(
-            fs.uri(f"counts/batch={batch_id}")
-        )
-        fs.touch(f"_batch_{batch_id}")
-        if compact_every:
-            committed_now = committed_batch_ids(fs) | {str(batch_id)}
-            n_real = sum(
-                1
-                for name in fs.listdir("counts")
-                if name.startswith("batch=")
-                and not name.startswith("batch=-")
-                and name.split("=", 1)[1] in committed_now
-            )
-            if n_real >= compact_every:
-                compact_nb_counts(spark, index_dir)
+    def write_batch(bdf: DataFrame, batch_id: int, fs, committed) -> None:
+        _batch_deltas(bdf, id_col, text_col, label_col).write.mode(
+            "overwrite"
+        ).parquet(fs.uri(f"counts/batch={batch_id}"))
 
-    return sink
+    return batched_sink(index_dir, LAYOUT, write_batch, compact_every)
 
 
 def foreach_batch_nb_train(stream: DataFrame, index_dir: str,
@@ -130,11 +109,7 @@ def serve_nb_weights(spark, index_dir: str) -> DataFrame:
     sufficient statistics are exact integers and the one float op per
     term consumes identical operands. Read-only (legacy overlay, no
     stamping)."""
-    fs = IndexFS(spark, index_dir)
-    committed = committed_batch_ids(fs) | legacy_overlay_ids(
-        fs, *_probes(fs)
-    )
-    dirs = _committed_count_dirs(fs, committed)
+    dirs = served_table_dirs(IndexFS(spark, index_dir), LAYOUT)["counts"]
     if not dirs:
         return spark.createDataFrame([], "term string, w_fp long")
     cnt = (
@@ -156,31 +131,9 @@ def serve_nb_weights(spark, index_dir: str) -> DataFrame:
     )
 
 
-def compact_nb_counts(spark, index_dir: str, buckets: int = 1,
-                      marker_horizon: int = 1000) -> dict:
-    """Fold committed delta partitions into ONE summed generation:
-    the protocol's first associative-merge compaction — the
-    generation holds per-term SUM(c1), SUM(c0) over everything it
-    consumed, so the post-compaction serve aggregates fewer rows to
-    the same integers. The cutover body is the layout-generic
-    ``batched_index.compact_batched_index`` with a CALLABLE layout
-    (the SUM-merge, localCheckpoint-ed so the count and the write
-    share one computation) — journal, tombstone grace, and crash
-    recovery are the shared machinery unchanged."""
-    from .batched_index import compact_batched_index
-
-    def _merge(df, b):
-        return (
-            df.groupBy("term")
-            .agg(
-                F.sum("c1").cast("long").alias("c1"),
-                F.sum("c0").cast("long").alias("c0"),
-            )
-            .repartition(b)
-            .localCheckpoint()
-        )
-
-    return compact_batched_index(
-        spark, index_dir, {"counts": _merge},
-        buckets=buckets, marker_horizon=marker_horizon,
-    )
+def compact_nb_counts(spark, index_dir: str) -> dict:
+    """Fold committed delta partitions into ONE summed generation
+    (``batched_index.compact_batched_index`` with :data:`LAYOUT`):
+    the post-compaction serve aggregates fewer rows to the same
+    integers."""
+    return compact_batched_index(spark, index_dir, LAYOUT)

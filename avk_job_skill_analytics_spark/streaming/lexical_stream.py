@@ -11,12 +11,9 @@ A stored lexical index is two tables under one root, both plain
 - ``doclen/batch=<id>``: (doc_id, dl) — the per-document token
   counts the BM25 length normalization needs corpus-wide.
 
-Appends are per-batch overwrite directories committed by the
-``_batch_<id>`` marker (a redelivered batch rewrites identical rows
-and converges; a clean replay short-circuits); compaction folds
-committed batches into a negative generation under the journaled,
-rename-free, tombstone-graced protocol — identical semantics to the
-LSH/IVF-PQ indexes because it IS the same code.
+Appends, commits and compaction are ``batched_index.batched_sink``
+and ``compact_batched_index`` — identical semantics to the other
+growing indexes because it IS the same code.
 
 Serving (:func:`serve_bm25`) reads ONLY committed partitions, pushes
 the query-term predicate into the postings scan (parquet row-group
@@ -31,25 +28,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .batched_index import spread_batch
-
 from ..operators.retrieval import bm25_rank
 from ..operators.textstats import tokens
-from .fsio import (
-    IndexFS,
-    committed_batch_ids,
-    ensure_protocol,
-    legacy_overlay_ids,
-    recover_compaction,
+from .batched_index import (
+    batched_sink,
+    compact_batched_index,
+    served_table_dirs,
+    spread_batch,
 )
-
-
-def _legacy_probes(fs):
-    """(legacy_gen_probe, batch_dir_probe) for this layout."""
-    return (
-        lambda: fs.is_dir("postings/batch=-1"),
-        lambda b: fs.is_dir(f"postings/batch={b}"),
-    )
+from .fsio import IndexFS
 
 __all__ = [
     "foreach_batch_bm25_maintain",
@@ -57,41 +44,23 @@ __all__ = [
     "compact_bm25_index",
 ]
 
-_TABLES = ("postings", "doclen")
-
-
-def _delete_bm25_batches(fs, bs: list[str]) -> None:
-    """Layout callback for the shared commit protocol: each batch's
-    rows live in one ``batch=<b>`` directory per table."""
-    for table in _TABLES:
-        for b in bs:
-            fs.delete(f"{table}/batch={b}")
-
-
-def _committed_dirs(fs, table: str, committed: set[str]) -> list[str]:
-    return [
-        fs.uri(f"{table}/{name}")
-        for name in fs.listdir(table)
-        if name.startswith("batch=")
-        and name.split("=", 1)[1] in committed
-    ]
+# postings re-sorted on term in each compacted file, so serving keeps
+# its row-group pruning; the probe table first
+LAYOUT = {
+    "postings": lambda df, b: df.repartition(b).sortWithinPartitions("term"),
+    "doclen": None,
+}
 
 
 def _bm25_maintain_batch_fn(index_dir: str, id_col: str, text_col: str,
                             compact_every: int | None = None):
-    """The per-batch maintenance body, exposed for redelivery tests.
-    Per trigger: one explode over the ARRIVALS only → their (doc,
-    term, tf) postings and (doc, dl) lengths land in per-batch
-    overwrite directories, the marker commits them. O(arrivals) per
-    trigger; the index is never rewritten (compaction amortizes)."""
+    """The per-batch maintenance body, exposed for redelivery tests:
+    ``batched_index.batched_sink`` around one explode over the
+    ARRIVALS only, whose (doc, term, tf) postings and (doc, dl)
+    lengths land in the batch's directories. O(arrivals) per trigger;
+    the index is never rewritten (compaction amortizes)."""
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        spark = bdf.sparkSession
-        fs = IndexFS(spark, index_dir)
-        if fs.exists(f"_batch_{batch_id}"):
-            return
-        ensure_protocol(fs, *_legacy_probes(fs))
-        recover_compaction(fs, _delete_bm25_batches)
+    def write_batch(bdf: DataFrame, batch_id: int, fs, committed) -> None:
         toks = tokens(
             spread_batch(bdf), id_col, text_col
         ).localCheckpoint()
@@ -113,20 +82,8 @@ def _bm25_maintain_batch_fn(index_dir: str, id_col: str, text_col: str,
         dl.write.mode("overwrite").parquet(
             fs.uri(f"doclen/batch={batch_id}")
         )
-        fs.touch(f"_batch_{batch_id}")
-        if compact_every:
-            committed_now = committed_batch_ids(fs) | {str(batch_id)}
-            n_real = sum(
-                1
-                for name in fs.listdir("postings")
-                if name.startswith("batch=")
-                and not name.startswith("batch=-")
-                and name.split("=", 1)[1] in committed_now
-            )
-            if n_real >= compact_every:
-                compact_bm25_index(spark, index_dir)
 
-    return sink
+    return batched_sink(index_dir, LAYOUT, write_batch, compact_every)
 
 
 def foreach_batch_bm25_maintain(stream: DataFrame, index_dir: str,
@@ -151,14 +108,8 @@ def serve_bm25(spark, index_dir: str, terms: list[str], id_col: str,
     is invisible), the query-term filter pushed into the parquet scan,
     and the shared ``bm25_rank`` scoring core — hash-identical to the
     batch BM25 over the same committed documents."""
-    fs = IndexFS(spark, index_dir)
-    # pre-v2 compat, READ-ONLY: overlay a legacy sentinel into this
-    # read's committed view (serving must not write to the root)
-    committed = committed_batch_ids(fs) | legacy_overlay_ids(
-        fs, *_legacy_probes(fs)
-    )
-    p_dirs = _committed_dirs(fs, "postings", committed)
-    d_dirs = _committed_dirs(fs, "doclen", committed)
+    dirs = served_table_dirs(IndexFS(spark, index_dir), LAYOUT)
+    p_dirs, d_dirs = dirs["postings"], dirs["doclen"]
     if not p_dirs:
         return spark.createDataFrame(
             [], f"{id_col} long, n_terms long, bm25_fp long, rk long"
@@ -172,30 +123,7 @@ def serve_bm25(spark, index_dir: str, terms: list[str], id_col: str,
     return bm25_rank(tf, dl, id_col, k=k, k1=k1, b=b, digits=digits)
 
 
-def compact_bm25_index(spark, index_dir: str, buckets: int = 1,
-                       marker_horizon: int = 1000) -> dict:
-    """Fold the committed per-batch posting/length directories into
-    one fresh negative generation per table — the same journaled,
-    rename-free, tombstone-graced protocol as the LSH and IVF-PQ
-    compactors (fsio module docstring), with the generation's
-    postings re-sorted on term so serving keeps its row-group
-    pruning. Returns {'postings_files_before', 'postings_files_after',
-    'rows'}. The cutover body is the layout-generic
-    ``batched_index.compact_batched_index`` (postings via a CALLABLE
-    layout for the sortWithinPartitions, doclen plain)."""
-    from .batched_index import compact_batched_index
-
-    stats = compact_batched_index(
-        spark, index_dir,
-        {
-            "postings": lambda df, b:
-                df.repartition(b).sortWithinPartitions("term"),
-            "doclen": None,
-        },
-        buckets=buckets, marker_horizon=marker_horizon,
-    )
-    return {
-        "postings_files_before": stats["files_before"],
-        "postings_files_after": stats["files_after"],
-        "rows": stats["rows"],
-    }
+def compact_bm25_index(spark, index_dir: str) -> dict:
+    """Fold the committed posting/length batches into one generation
+    (``batched_index.compact_batched_index`` with :data:`LAYOUT`)."""
+    return compact_batched_index(spark, index_dir, LAYOUT)

@@ -12,15 +12,12 @@ bytes, not corpus), not deltas:
   GD step on its own rows (the engine-exact integer micro-gradient
   arithmetic of ``operators/linearmodel`` — one aggregate over the
   batch, a d-integer driver update), and appends the new state
-  exactly once under the marker protocol (redelivered batches
-  short-circuit, so a crash between step and commit replays to the
-  identical state);
+  exactly once through ``batched_index.batched_sink`` (a crash
+  between step and commit replays to the identical state);
 - serving reads the max-``seq`` committed state — O(batches) tiny
   files, bounded by compaction;
-- compaction is the protocol's latest-state merge: fold committed
-  state partitions into one generation holding only the newest
-  ``seq`` (journaled rename-free cutover, tombstone grace, crash
-  recovery — the shared ``batched_index`` machinery unchanged).
+- compaction is the latest-state merge: fold committed state
+  partitions into one generation holding only the newest ``seq``.
 
 The registry oracle replays the whole trajectory in SQL — per-batch
 source CTEs in arrival order, one unrolled (gradient, update) pair
@@ -38,13 +35,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import linearmodel as lm
-from .fsio import (
-    IndexFS,
-    committed_batch_ids,
-    ensure_protocol,
-    legacy_overlay_ids,
-    recover_compaction,
+from .batched_index import (
+    batched_sink,
+    committed_table_dirs,
+    compact_batched_index,
+    served_table_dirs,
 )
+from .fsio import IndexFS
 
 __all__ = [
     "foreach_batch_logreg_train",
@@ -55,35 +52,27 @@ __all__ = [
 _SCHEMA = "j int, w_micro long, cum_n long, seq long"
 
 
-def _delete_weight_batches(fs, bs: list[str]) -> None:
-    for b in bs:
-        fs.delete(f"weights/batch={b}")
-
-
-def _probes(fs):
+def _latest_only(df, buckets):
+    """Latest-state merge: keep only the newest ``seq`` — older steps
+    are superseded by construction (localCheckpoint-ed so the row
+    count and the write share one computation)."""
+    mx = df.agg(F.max("seq").alias("m"))
     return (
-        lambda: fs.is_dir("weights/batch=-1"),
-        lambda b: fs.is_dir(f"weights/batch={b}"),
+        df.join(F.broadcast(mx), df.seq == mx.m, "left_semi")
+        .repartition(buckets)
+        .localCheckpoint()
     )
 
 
-def _committed_weight_dirs(fs) -> list[str]:
-    committed = committed_batch_ids(fs) | legacy_overlay_ids(
-        fs, *_probes(fs)
-    )
-    return [
-        fs.uri(f"weights/{name}")
-        for name in fs.listdir("weights")
-        if name.startswith("batch=")
-        and name.split("=", 1)[1] in committed
-    ]
+LAYOUT = {"weights": _latest_only}
 
 
-def _latest_state(spark, fs, d: int) -> tuple[list[int], int, int]:
-    """(micro-weights, cum_n, seq) of the newest committed step —
-    zeros before the first. Reads O(batches·d) tiny rows; the 1-row
-    collect per field is the bounded-driver discipline."""
-    dirs = _committed_weight_dirs(fs)
+def _latest_state(spark, dirs: list[str],
+                  d: int) -> tuple[list[int], int, int]:
+    """(micro-weights, cum_n, seq) of the newest committed step in
+    the state directories ``dirs`` — zeros before the first. Reads
+    O(batches·d) tiny rows; the 1-row collect per field is the
+    bounded-driver discipline."""
     if not dirs:
         return [0] * d, 0, 0
     df = spark.read.schema(_SCHEMA).parquet(*dirs)
@@ -100,17 +89,16 @@ def _logreg_train_batch_fn(index_dir: str, feature_cols: list[str],
                            label_col: str,
                            lr_num: float, lr_den: float,
                            compact_every: int | None = None):
-    """Per-batch training body, exposed for redelivery tests."""
+    """Per-batch training body, exposed for redelivery tests:
+    ``batched_index.batched_sink`` around one GD step from the latest
+    committed state, written to ``weights/batch=<id>``."""
+    d = len(feature_cols)
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
+    def write_batch(bdf: DataFrame, batch_id: int, fs, committed) -> None:
         spark = bdf.sparkSession
-        fs = IndexFS(spark, index_dir)
-        if fs.exists(f"_batch_{batch_id}"):
-            return
-        ensure_protocol(fs, *_probes(fs))
-        recover_compaction(fs, _delete_weight_batches)
-        d = len(feature_cols)
-        w, cum_n, seq = _latest_state(spark, fs, d)
+        w, cum_n, seq = _latest_state(
+            spark, committed_table_dirs(fs, "weights", committed), d
+        )
         exprs = ["count(*) AS n"] + [
             f"{g} AS g{j}"
             for j, g in enumerate(
@@ -118,35 +106,24 @@ def _logreg_train_batch_fn(index_dir: str, feature_cols: list[str],
         ]
         row = bdf.selectExpr(*exprs).collect()[0]
         n = int(row["n"])
-        if n > 0:
-            grads = [int(row[f"g{j}"]) for j in range(d)]
-            w = lm.update_weights(w, grads, n, lr_num, lr_den)
-            rows = [(j, w[j], cum_n + n, seq + 1) for j in range(d)]
-            # single-partition from birth: createDataFrame spreads d
-            # python rows over defaultParallelism partitions, and
-            # coalesce(1) then evaluates ALL parent python partitions
-            # sequentially inside the one write task (~4 s per tiny
-            # state write — same pathology as ann_index round 10);
-            # parallelize(_, 1) keeps the write one cheap task
-            spark.createDataFrame(
-                spark.sparkContext.parallelize(rows, 1), _SCHEMA
-            ).write.mode("overwrite").parquet(
-                fs.uri(f"weights/batch={batch_id}")
-            )
-        fs.touch(f"_batch_{batch_id}")
-        if compact_every:
-            committed_now = committed_batch_ids(fs) | {str(batch_id)}
-            n_real = sum(
-                1
-                for name in fs.listdir("weights")
-                if name.startswith("batch=")
-                and not name.startswith("batch=-")
-                and name.split("=", 1)[1] in committed_now
-            )
-            if n_real >= compact_every:
-                compact_logreg_weights(spark, index_dir)
+        if n == 0:
+            return  # the marker commits; no step, seq unchanged
+        grads = [int(row[f"g{j}"]) for j in range(d)]
+        w = lm.update_weights(w, grads, n, lr_num, lr_den)
+        rows = [(j, w[j], cum_n + n, seq + 1) for j in range(d)]
+        # single-partition from birth: createDataFrame spreads d
+        # python rows over defaultParallelism partitions, and
+        # coalesce(1) then evaluates ALL parent python partitions
+        # sequentially inside the one write task (~4 s per tiny
+        # state write — same pathology as ann_index round 10);
+        # parallelize(_, 1) keeps the write one cheap task
+        spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, 1), _SCHEMA
+        ).write.mode("overwrite").parquet(
+            fs.uri(f"weights/batch={batch_id}")
+        )
 
-    return sink
+    return batched_sink(index_dir, LAYOUT, write_batch, compact_every)
 
 
 def foreach_batch_logreg_train(stream: DataFrame, index_dir: str,
@@ -171,9 +148,9 @@ def serve_logreg_weights(spark, index_dir: str,
     """The CURRENT model as a (stat, value) BIGINT ledger:
     per-feature micro-weights of the newest committed step plus the
     step count and cumulative rows consumed."""
-    fs = IndexFS(spark, index_dir)
     d = len(stat_names)
-    w, cum_n, seq = _latest_state(spark, fs, d)
+    dirs = served_table_dirs(IndexFS(spark, index_dir), LAYOUT)
+    w, cum_n, seq = _latest_state(spark, dirs["weights"], d)
     rows = [(s, w[j]) for j, s in enumerate(stat_names)]
     rows += [("n_batches", seq), ("n_seen", cum_n)]
     return spark.createDataFrame(
@@ -182,23 +159,9 @@ def serve_logreg_weights(spark, index_dir: str,
     )
 
 
-def compact_logreg_weights(spark, index_dir: str,
-                           marker_horizon: int = 1000) -> dict:
+def compact_logreg_weights(spark, index_dir: str) -> dict:
     """Fold committed state partitions into ONE generation holding
-    only the newest ``seq`` — the latest-state merge: older steps
-    are superseded by construction, so serving is invariant while
-    the committed file count drops to one."""
-    from .batched_index import compact_batched_index
-
-    def _merge(df, b):
-        mx = df.agg(F.max("seq").alias("m"))
-        return (
-            df.join(F.broadcast(mx), df.seq == mx.m, "left_semi")
-            .repartition(b)
-            .localCheckpoint()
-        )
-
-    return compact_batched_index(
-        spark, index_dir, {"weights": _merge},
-        marker_horizon=marker_horizon,
-    )
+    only the newest ``seq`` (``batched_index.compact_batched_index``
+    with :data:`LAYOUT`): serving is invariant while the committed
+    file count drops to one."""
+    return compact_batched_index(spark, index_dir, LAYOUT)

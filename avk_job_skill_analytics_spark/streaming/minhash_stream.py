@@ -47,7 +47,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .batched_index import spread_batch
+from .batched_index import (
+    batched_sink,
+    committed_table_dirs,
+    compact_batched_index,
+    spread_batch,
+)
 
 from ..operators.dedup import minhash_signatures, word_shingles
 from ..operators.hashing import (
@@ -243,58 +248,23 @@ def stream_minhash_dedup(stream: DataFrame, index_bands: DataFrame,
                            threshold)
 
 
-def _delete_lsh_batches(fs, bs: list[str]) -> None:
-    """Layout callback for the shared commit protocol: each batch's
-    data lives in one ``batch=<b>`` directory per table."""
-    for table in ("bands", "sets"):
-        for b in bs:
-            fs.delete(f"{table}/batch={b}")
+# bands clustered on the (band, sig) join key; the probe table first
+LAYOUT = {"bands": ["band", "sig"], "sets": None}
 
 
 def _lsh_maintain_batch_fn(index_dir: str, id_col: str, text_col: str,
                            k: int, num_hashes: int, bands: int,
                            threshold: float, seed: int,
                            compact_every: int | None = None):
-    """The per-batch maintenance body, exposed for redelivery tests.
+    """The per-batch maintenance body, exposed for redelivery tests:
+    ``batched_index.batched_sink`` around this family's work — sign
+    the arrivals once, verify them against the COMMITTED index, and
+    write ``pairs``/``bands``/``sets`` for the batch. Pairs are
+    per-batch artifacts, not appends, so no pair is ever re-emitted."""
+    rows_per_band = num_hashes // bands
 
-    Exactly-once discipline (the foreach_batch_upsert marker pattern
-    composed with per-batch overwrite directories): every artifact of
-    batch b lands in its own ``batch=<b>`` directory via
-    mode("overwrite") — a crash-redelivered batch rewrites IDENTICAL
-    rows over itself and converges — and the ``_batch_<b>`` marker
-    short-circuits clean replays entirely, so the index gains each
-    document's signatures exactly once and no pair is ever re-emitted
-    (pairs are per-batch artifacts, not appends). All index-path I/O
-    goes through the Hadoop FileSystem shim (fsio.IndexFS), so the
-    index root may be file:/hdfs:/s3a:.
-
-    ``compact_every``: when set, the sink auto-compacts after its
-    append whenever the committed REAL-batch directory count reaches
-    the threshold — bounded amortized maintenance with no operator
-    involvement (VERDICT r6 ask #6)."""
-    from .fsio import (
-        IndexFS,
-        committed_batch_ids,
-        ensure_protocol,
-        recover_compaction,
-    )
-
-    def sink(bdf: DataFrame, batch_id: int) -> None:
+    def write_batch(bdf: DataFrame, batch_id: int, fs, committed) -> None:
         spark = bdf.sparkSession
-        fs = IndexFS(spark, index_dir)
-        if fs.exists(f"_batch_{batch_id}"):
-            return
-        # one-time upgrade stamp: adopt a pre-v2 index's unmarkered
-        # batch=-1 sentinel before any v2 read/recover touches it
-        ensure_protocol(fs, lambda: fs.is_dir("bands/batch=-1"),
-                        lambda b: fs.is_dir(f"bands/batch={b}"))
-        recover_compaction(fs, _delete_lsh_batches)
-        # ONE committed-set resolution per batch (root listing +
-        # journal read) shared by both table reads and the compaction
-        # trigger — metadata round-trips are the per-trigger cost on
-        # object stores
-        committed = committed_batch_ids(fs)
-        rows_per_band = num_hashes // bands
         # localCheckpoint: one micro-batch of signatures, reused by
         # the pair join AND both index appends without re-signing
         signed = _sign_documents(
@@ -312,15 +282,12 @@ def _lsh_maintain_batch_fn(index_dir: str, id_col: str, text_col: str,
             F.col("_sh").alias("_idx_sh"),
             F.col("_n").alias("_idx_n"),
         )
-        # the index view is the COMMITTED batches only (marker present
-        # or a journal-committed generation) — a crash-redelivered
-        # batch never sees its own half-written directories, so its
-        # recomputed pairs are identical to the first attempt's, and a
-        # crash between the bands and sets writes can't break the read
-        # (the uncommitted dirs are simply not in the view until the
-        # rewrite completes and the marker lands)
-        committed_b = _committed_index_dirs(fs, "bands", committed)
-        committed_s = _committed_index_dirs(fs, "sets", committed)
+        # the index view is the COMMITTED batches only — a
+        # crash-redelivered batch never sees its own half-written
+        # directories, so its recomputed pairs are identical to the
+        # first attempt's
+        committed_b = committed_table_dirs(fs, "bands", committed)
+        committed_s = committed_table_dirs(fs, "sets", committed)
         if committed_b:
             idx_b = spark.read.parquet(*committed_b)
             idx_s = spark.read.parquet(*committed_s)
@@ -341,106 +308,16 @@ def _lsh_maintain_batch_fn(index_dir: str, id_col: str, text_col: str,
         sets_new.write.mode("overwrite").parquet(
             fs.uri(f"sets/batch={batch_id}")
         )
-        fs.touch(f"_batch_{batch_id}")
-        if compact_every:
-            # this batch just committed: count its dir plus the other
-            # committed real-batch dirs (the prior resolution is still
-            # valid — single writer, plus the id we just committed)
-            committed_now = committed | {str(batch_id)}
-            n_real = sum(
-                1
-                for name in fs.listdir("bands")
-                if name.startswith("batch=")
-                and not name.startswith("batch=-")
-                and name.split("=", 1)[1] in committed_now
-            )
-            if n_real >= compact_every:
-                compact_lsh_index(spark, index_dir)
 
-    return sink
+    return batched_sink(index_dir, LAYOUT, write_batch, compact_every)
 
 
-def _committed_index_dirs(fs, table: str,
-                          committed: set[str] | None = None) -> list[str]:
-    """``batch=<id>`` directories of ``table`` whose batch is
-    COMMITTED under the shared protocol (fsio.committed_batch_ids:
-    marker present or journal-committed generation, minus
-    journal-consumed batches). Markers are written AFTER all of a
-    batch's artifacts, so this set never contains half-written
-    directories. Pass ``committed`` to reuse one resolution across
-    several tables."""
-    from .fsio import committed_batch_ids
-
-    if committed is None:
-        committed = committed_batch_ids(fs)
-    return [
-        fs.uri(f"{table}/{name}")
-        for name in fs.listdir(table)
-        if name.startswith("batch=")
-        and name.split("=", 1)[1] in committed
-    ]
-
-
-def _recover_compaction(fs) -> None:
-    """Finish a journal-committed compaction whose apply step was
-    interrupted — idempotent, a no-op without a journal (the shared
-    fsio protocol with this module's table layout)."""
-    from .fsio import recover_compaction
-
-    recover_compaction(fs, _delete_lsh_batches)
-
-
-def compact_lsh_index(spark, index_dir: str, buckets: int = 1,
-                      marker_horizon: int = 1000) -> dict:
-    """Compact the growing index's COMMITTED ``batch=<id>`` directories
-    — the periodic maintenance job that keeps the per-trigger index
-    join from degrading into a thousands-of-small-files listing as
-    batches accumulate.
-
-    All committed rows rewrite into a single fresh GENERATION
-    partition ``batch=<gen>`` (negative, below every previous
-    generation — ids a foreachBatch never assigns), hash-clustered on
-    the join key and bounded to ``buckets`` files per table — the
-    layout stays uniform, so readers and future appends are
-    untouched.
-
-    Rename-free journaled cutover (fsio module docstring has the full
-    protocol): (1) write the compacted generation DIRECTLY at its
-    final path — invisible until committed, because readers only
-    trust marker/journal batches; (2) commit by atomically publishing
-    the ``_compact_commit`` journal {gen, consumed}; (3) apply —
-    marker the generation, delete consumed dirs and consumed sentinel
-    markers, clear the journal. A crash BEFORE commit leaves the live
-    index untouched (the half-written generation is invisible and
-    reclaimed next run); a crash AFTER commit — in any window,
-    including mid-recovery or a later compaction consuming a previous
-    generation — is finished idempotently by the shared
-    ``recover_compaction``, which this function and the maintenance
-    sink both run first. No directory is ever renamed, so the
-    protocol holds on object stores. REAL batch markers are
-    preserved: a redelivered pre-compaction batch still
-    short-circuits instead of re-appending rows that now live in the
-    generation partition. An uncommitted (mid-redelivery) batch
-    directory is NOT consumed — its batch still owns the rewrite.
-    Returns {'bands_files_before', 'bands_files_after', 'rows'}.
-
-    The protocol body lives in the layout-generic
-    ``batched_index.compact_batched_index`` (this module's layout:
-    bands clustered on the (band, sig) join key, sets plain) — one
-    implementation of the cutover shared with every growing-index
-    family, crash windows locked by this module's pytest suite."""
-    from .batched_index import compact_batched_index
-
-    stats = compact_batched_index(
-        spark, index_dir,
-        {"bands": ["band", "sig"], "sets": None},
-        buckets=buckets, marker_horizon=marker_horizon,
-    )
-    return {
-        "bands_files_before": stats["files_before"],
-        "bands_files_after": stats["files_after"],
-        "rows": stats["rows"],
-    }
+def compact_lsh_index(spark, index_dir: str) -> dict:
+    """Fold the growing index's committed batch directories into one
+    generation (``batched_index.compact_batched_index`` with
+    :data:`LAYOUT`), keeping the per-trigger index join from
+    degrading into a small-files listing."""
+    return compact_batched_index(spark, index_dir, LAYOUT)
 
 
 def foreach_batch_lsh_maintain(stream: DataFrame, index_dir: str,
@@ -455,12 +332,9 @@ def foreach_batch_lsh_maintain(stream: DataFrame, index_dir: str,
     CURRENT banded index (pairs emitted exactly once, to a per-batch
     artifact), then (2) their signatures and shingle sets are APPENDED
     to the index, so later batches collide with everything that came
-    before. The index lives as plain ``batch=<id>``-partitioned
-    parquet on ANY Hadoop filesystem (file:/hdfs:/s3a: — all commit
-    metadata goes through fsio.IndexFS), with journaled rename-free
-    compaction of the batch directories; ``compact_every`` makes the
-    sink self-compact whenever that many real batches have
-    accumulated."""
+    before. The index is plain ``batch=<id>``-partitioned parquet
+    maintained by ``batched_index.batched_sink`` (commit protocol and
+    ``compact_every`` self-compaction)."""
     sink = _lsh_maintain_batch_fn(
         index_dir, id_col, text_col, k, num_hashes, bands, threshold,
         seed, compact_every=compact_every,

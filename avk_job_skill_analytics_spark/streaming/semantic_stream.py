@@ -18,18 +18,14 @@ exact sets; lexical_stream: BM25; ann_maintain: IVF-PQ):
   case the frozen gate misses);
 - every candidate verifies by EXACT cosine against the vector table
   before emitting ``(id_a, id_b, cosine)`` with ``id_a < id_b``;
-- the arrivals' band postings and vectors append exactly once under
-  the shared marker protocol (``fsio`` + ``batched_index``): every
-  artifact of batch b is a ``<table>/batch=<b>`` overwrite
-  directory, the ``_batch_<b>`` marker commits them all, clean
-  replays short-circuit, and a pre-marker crash recomputes an
-  identical pair set that overwrites itself — NO per-pair operator
-  state anywhere, so a continuous deployment's state is the on-disk
-  index, not a growing dropDuplicates map;
+- the arrivals' band postings and vectors append exactly once
+  through ``batched_index.batched_sink`` (a pre-marker crash
+  recomputes an identical pair set that overwrites itself) — NO
+  per-pair operator state anywhere, so a continuous deployment's
+  state is the on-disk index, not a growing dropDuplicates map;
 - ``compact_every`` folds committed batches into one generation
-  partition clustered on (band, sig) through the shared journaled
-  rename-free cutover, so the per-trigger candidate join reads stay
-  local and the file count stays bounded.
+  partition clustered on (band, sig), so the per-trigger candidate
+  join reads stay local and the file count stays bounded.
 
 At 100 TB: per trigger the shuffle is O(batch × matched buckets) —
 the corpus enters only through the (band, sig)-clustered postings
@@ -50,16 +46,14 @@ from pyspark.sql import functions as F
 
 from ..operators.similarity import _dot, _norm, band_sig_structs_np
 from .batched_index import (
+    batched_sink,
     committed_table_dirs,
     compact_batched_index,
-    make_delete_batches,
     spread_batch,
 )
 
-TABLES = ("bands", "vecs")
-_CLUSTER = {"bands": ["band", "sig"], "vecs": None}
-
-_delete_semantic_batches = make_delete_batches(TABLES)
+# band postings clustered on the (band, sig) join key; probe table first
+LAYOUT = {"bands": ["band", "sig"], "vecs": None}
 
 
 def _semantic_maintain_batch_fn(index_dir: str, id_col: str,
@@ -68,23 +62,13 @@ def _semantic_maintain_batch_fn(index_dir: str, id_col: str,
                                 threshold: float = 0.4,
                                 round_digits: int = 6,
                                 compact_every: int | None = None):
-    """The per-batch maintenance body, exposed for redelivery tests."""
-    from .fsio import (
-        IndexFS,
-        committed_batch_ids,
-        ensure_protocol,
-        recover_compaction,
-    )
+    """The per-batch maintenance body, exposed for redelivery tests:
+    ``batched_index.batched_sink`` around this family's banding,
+    exact-cosine verification and ``pairs``/``bands``/``vecs``
+    writes."""
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
+    def write_batch(bdf: DataFrame, batch_id: int, fs, committed) -> None:
         spark = bdf.sparkSession
-        fs = IndexFS(spark, index_dir)
-        if fs.exists(f"_batch_{batch_id}"):
-            return
-        ensure_protocol(fs, lambda: fs.is_dir("bands/batch=-1"),
-                        lambda b: fs.is_dir(f"bands/batch={b}"))
-        recover_compaction(fs, _delete_semantic_batches)
-        committed = committed_batch_ids(fs)
         arr = spread_batch(bdf).select(
             F.col(id_col), F.col(vec_col)
         ).localCheckpoint()
@@ -159,32 +143,16 @@ def _semantic_maintain_batch_fn(index_dir: str, id_col: str,
         vecs_new.write.mode("overwrite").parquet(
             fs.uri(f"vecs/batch={batch_id}")
         )
-        fs.touch(f"_batch_{batch_id}")
-        if compact_every:
-            committed_now = committed | {str(batch_id)}
-            n_real = sum(
-                1
-                for name in fs.listdir("bands")
-                if name.startswith("batch=")
-                and not name.startswith("batch=-")
-                and name.split("=", 1)[1] in committed_now
-            )
-            if n_real >= compact_every:
-                compact_semantic_index(spark, index_dir)
 
-    return sink
+    return batched_sink(index_dir, LAYOUT, write_batch, compact_every)
 
 
-def compact_semantic_index(spark, index_dir: str, buckets: int = 1,
-                           marker_horizon: int = 1000) -> dict:
+def compact_semantic_index(spark, index_dir: str) -> dict:
     """Fold committed bands/vecs batches into one generation
-    partition, band postings clustered on (band, sig) — the shared
-    journaled rename-free cutover, so the per-trigger candidate join
-    never degrades into a small-files listing."""
-    return compact_batched_index(
-        spark, index_dir, _CLUSTER,
-        buckets=buckets, marker_horizon=marker_horizon,
-    )
+    (``batched_index.compact_batched_index`` with :data:`LAYOUT`), so
+    the per-trigger candidate join never degrades into a small-files
+    listing."""
+    return compact_batched_index(spark, index_dir, LAYOUT)
 
 
 def foreach_batch_semantic_maintain(stream: DataFrame, index_dir: str,

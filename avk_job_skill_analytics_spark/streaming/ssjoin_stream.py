@@ -34,11 +34,9 @@ Spark-first shape (mirrors the LSH maintenance sink):
   (the sets table carries each doc's full set in-row), exact integer
   Jaccard in 1e-6 fixed point — over the distinct-shingle-HASH sets,
   the same convention the LSH verify path uses;
-- exactly-once maintenance, committed-batch reads, tombstoned
-  journaled compaction, and auto-compaction all come from the shared
-  protocol (``fsio`` + ``batched_index``) — markers after artifacts,
-  per-batch overwrite directories, rename-free cutover; the index
-  root may be file:/hdfs:/s3a:.
+- exactly-once maintenance, committed-batch reads and
+  (auto-)compaction all come from ``batched_index.batched_sink``;
+  the index root may be file:/hdfs:/s3a:.
 
 At 100 TB: per trigger the shuffle is O(new_prefix_postings) joined
 against the hash-clustered committed postings; the corpus enters only
@@ -53,17 +51,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .batched_index import (
-    spread_batch,
+    batched_sink,
     committed_table_dirs,
     compact_batched_index,
-    make_delete_batches,
+    spread_batch,
 )
 from .minhash_stream import shingle_hash_array
 
-TABLES = ("postings", "sets")
-_CLUSTER = {"postings": ["h"], "sets": None}
-
-_delete_ssjoin_batches = make_delete_batches(TABLES)
+# postings hash-clustered on the join hash; probe table first
+LAYOUT = {"postings": ["h"], "sets": None}
 
 
 def signed_sets(df: DataFrame, id_col: str, text_col: str, k: int,
@@ -95,30 +91,15 @@ def _ssjoin_maintain_batch_fn(index_dir: str, id_col: str,
                               text_col: str, k: int, t_num: int,
                               t_den: int,
                               compact_every: int | None = None):
-    """The per-batch maintenance body, exposed for redelivery tests —
-    the exactly-once discipline of ``_lsh_maintain_batch_fn`` with
-    the prefix-postings layout: every artifact of batch b is a
-    ``<table>/batch=<b>`` overwrite directory, the ``_batch_<b>``
-    marker commits them all, clean replays short-circuit, and the
-    index view is committed batches only (a redelivered batch never
-    sees its own half-written directories, so recomputed pairs are
-    identical and overwrite themselves)."""
-    from .fsio import (
-        IndexFS,
-        committed_batch_ids,
-        ensure_protocol,
-        recover_compaction,
-    )
+    """The per-batch maintenance body, exposed for redelivery tests:
+    ``batched_index.batched_sink`` around this family's signing,
+    prefix-postings candidates, exact verification and
+    ``pairs``/``postings``/``sets`` writes. The index view is
+    committed batches only, so a redelivered batch never sees its own
+    half-written directories and its recomputed pairs are identical."""
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
+    def write_batch(bdf: DataFrame, batch_id: int, fs, committed) -> None:
         spark = bdf.sparkSession
-        fs = IndexFS(spark, index_dir)
-        if fs.exists(f"_batch_{batch_id}"):
-            return
-        ensure_protocol(fs, lambda: fs.is_dir("postings/batch=-1"),
-                        lambda b: fs.is_dir(f"postings/batch={b}"))
-        recover_compaction(fs, _delete_ssjoin_batches)
-        committed = committed_batch_ids(fs)
         signed = signed_sets(
             spread_batch(bdf), id_col, text_col, k, t_num, t_den
         ).localCheckpoint()
@@ -215,34 +196,16 @@ def _ssjoin_maintain_batch_fn(index_dir: str, id_col: str,
         sets_new.write.mode("overwrite").parquet(
             fs.uri(f"sets/batch={batch_id}")
         )
-        fs.touch(f"_batch_{batch_id}")
-        if compact_every:
-            committed_now = committed | {str(batch_id)}
-            n_real = sum(
-                1
-                for name in fs.listdir("postings")
-                if name.startswith("batch=")
-                and not name.startswith("batch=-")
-                and name.split("=", 1)[1] in committed_now
-            )
-            if n_real >= compact_every:
-                compact_ssjoin_index(spark, index_dir)
 
-    return sink
+    return batched_sink(index_dir, LAYOUT, write_batch, compact_every)
 
 
-def compact_ssjoin_index(spark, index_dir: str, buckets: int = 1,
-                         marker_horizon: int = 1000) -> dict:
+def compact_ssjoin_index(spark, index_dir: str) -> dict:
     """Fold committed postings/sets batches into one generation
-    partition, postings hash-clustered on the join hash ``h`` — the
-    shared journaled rename-free cutover (``batched_index``), so a
-    long-running stream's per-trigger join never degrades into a
-    small-files listing. Returns {'files_before', 'files_after',
-    'rows'} over the postings table."""
-    return compact_batched_index(
-        spark, index_dir, _CLUSTER,
-        buckets=buckets, marker_horizon=marker_horizon,
-    )
+    (``batched_index.compact_batched_index`` with :data:`LAYOUT`).
+    Returns {'files_before', 'files_after', 'rows'} over the postings
+    table."""
+    return compact_batched_index(spark, index_dir, LAYOUT)
 
 
 def foreach_batch_ssjoin_maintain(stream: DataFrame, index_dir: str,

@@ -1696,6 +1696,34 @@ def test_repetition_rules_short_and_degenerate_docs(spark):
         assert rows[2][f"top_{n}gram_fp"] > 1_000_000
 
 
+
+def test_repetition_rules_unigram_width(spark):
+    """n=1 is a valid width: the word array itself is the 1-gram
+    array, so top_ns=(1,) and dup_ns=(1,) compute the most frequent
+    word's and the repeated words' character mass."""
+    from avk_job_skill_analytics_spark.operators.textstats import (
+        repetition_rules,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a a b"), (2, "x y z")], "doc_id long, text string"
+    )
+    rows = {
+        r["doc_id"]: r.asDict()
+        for r in repetition_rules(
+            df, "doc_id", "text", top_ns=(1,), dup_ns=(1,),
+            top_caps_fp=(300_000,), dup_caps_fp=(300_000,),
+        ).collect()
+    }
+    # "a a b": total_chars 5; "a" occurs twice, mass 2 for both rules
+    assert rows[1]["top_1gram_fp"] == 400_000
+    assert rows[1]["dup_1gram_fp"] == 400_000
+    assert rows[1]["passes"] is False
+    # "x y z": every word once — top mass 1, nothing repeats
+    assert rows[2]["top_1gram_fp"] == 200_000
+    assert rows[2]["dup_1gram_fp"] == 0
+    assert rows[2]["passes"] is True
+
 def test_vocab_coverage_boundary_and_counts(spark):
     """The vocabulary boundary is deterministic (count desc, term asc)
     and per-doc OOV counts are exact: with V=2 over a corpus where

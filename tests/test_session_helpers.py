@@ -60,3 +60,69 @@ def test_scratch_persist_bounds_storage(spark):
     assert len(_SCRATCH_PERSISTED) <= 4
     # evicted frames still compute correctly (recompute, not corruption)
     assert frames[0].count() == 10
+
+
+def test_scratch_persist_fifo_is_thread_safe(monkeypatch):
+    """Concurrent scratch_persist calls from several driver threads:
+    the FIFO never holds more than `keep` frames in any state another
+    thread can observe, ends holding exactly `keep`, and every evicted
+    frame is unpersisted exactly once. The FIFO is swapped for a list
+    that yields the GIL inside each operation, widening every
+    check-then-act window an unguarded FIFO would race through."""
+    import threading
+    import time
+
+    from avk_job_skill_analytics_spark.plans import session
+
+    class YieldingList(list):
+        def append(self, x):
+            super().append(x)
+            time.sleep(0)
+
+        def pop(self, i=-1):
+            time.sleep(0)
+            return super().pop(i)
+
+        def __len__(self):
+            n = super().__len__()
+            time.sleep(0)
+            return n
+
+    keep, n_threads, per_thread = 3, 8, 100
+    fifo = YieldingList()
+    monkeypatch.setattr(session, "_SCRATCH_PERSISTED", fifo)
+    seen: list[int] = []
+    unpersisted: list[int] = []
+
+    class Frame:
+        def __init__(self, i):
+            self.i = i
+
+        def _observe(self):
+            # read the FIFO under its lock: a state other threads see
+            with session._SCRATCH_LOCK:
+                seen.append(list.__len__(fifo))
+
+        def persist(self):
+            self._observe()
+
+        def unpersist(self):
+            self._observe()
+            unpersisted.append(self.i)
+
+    def worker(t):
+        for j in range(per_thread):
+            session.scratch_persist(Frame(t * per_thread + j), keep=keep)
+
+    threads = [threading.Thread(target=worker, args=(t,))
+               for t in range(n_threads)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=60)
+    assert not any(th.is_alive() for th in threads)
+    total = n_threads * per_thread
+    assert max(seen) <= keep
+    assert list.__len__(fifo) == keep
+    assert len(unpersisted) == len(set(unpersisted)) == total - keep
+    assert {f.i for f in fifo}.isdisjoint(unpersisted)
