@@ -11,6 +11,14 @@ build) — plus two tiny side tables, ``coarse/`` (cell, cv) and
 (n_cells·d + m·k*·sub_d doubles; parquet round-trips doubles
 bit-exact).
 
+Commit protocol: the cells inventory is one of the growing-index
+layouts of ``streaming/batched_index`` (:data:`LAYOUT`). Appends run
+through its ``batched_sink`` (``streaming/ann_maintain``), serving
+reads its committed view (``served_leaves``) and
+:func:`compact_cells` is its ``compact_batched_index``; the versioned
+retrain/cutover (:func:`rebuild_swap`) is a separate create-only
+protocol.
+
 Cited design: the IVF-PQ pipeline is Jégou et al. TPAMI'11; the
 store-offline/probe-pruned/absorb-online discipline mirrors how FAISS
 deployments separate index training from serving.
@@ -21,38 +29,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..streaming.batched_index import (
+    Table,
+    compact_batched_index,
+    served_leaves,
+)
 
-def _delete_cells_batches(fs, bs: list[str]) -> None:
-    """Layout callback for the shared commit protocol
-    (streaming/fsio): each batch's codes live in one ``_batch=<b>``
-    leaf under every ``_cell=<c>`` directory — the cells enumeration
-    is paid once for the whole batch list."""
-    cells = [cd for cd in fs.listdir("cells") if cd.startswith("_cell=")]
-    for cd in cells:
-        for b in bs:
-            fs.delete(f"cells/{cd}/_batch={b}")
-
-
-def _recover_cells(fs) -> None:
-    """Finish a journal-committed cells compaction — idempotent,
-    no-op without a journal."""
-    from ..streaming.fsio import recover_compaction
-
-    recover_compaction(fs, _delete_cells_batches)
-
-
-def _leaf_batch_ids(fs) -> set[str]:
-    """Batch ids that actually own data leaves under cells/ — the
-    bounded set (post-compaction: one generation + recent batches)
-    that keeps reader predicates independent of how many markers
-    exist."""
-    return {
-        name.split("=", 1)[1]
-        for cd in fs.listdir("cells")
-        if cd.startswith("_cell=")
-        for name in fs.listdir(f"cells/{cd}")
-        if name.startswith("_batch=")
-    }
+# the cells inventory's leaf layout for the shared commit protocol
+# (streaming/batched_index): one ``_cell=<c>/_batch=<id>`` leaf per
+# (cell, batch), compacted one file per cell
+LAYOUT = {"cells": Table(["_cell"], batch="_batch", outer="_cell")}
 
 
 def write_cells(codes: DataFrame, cells_path: str,
@@ -69,7 +55,7 @@ def write_cells(codes: DataFrame, cells_path: str,
     in one task, so each ``(_cell, _batch)`` leaf is exactly one
     file. The shuffle moves only (id, cell, m-byte codes) — the
     lightweight proxy, never vectors. Callers that already clustered
-    (compact_cells' bucketed repartition) pass ``distribute=False``."""
+    pass ``distribute=False``."""
     if distribute:
         codes = codes.repartition("_cell")
     (
@@ -192,11 +178,7 @@ def serve_topk(spark, index_dir: str, queries: DataFrame, id_col: str,
     collects)."""
     from . import similarity
 
-    from ..streaming.fsio import (
-        IndexFS,
-        committed_batch_ids,
-        legacy_overlay_ids,
-    )
+    from ..streaming.fsio import IndexFS
 
     coarse, cbs = load_codebooks(spark, index_dir)
     # ONE job computes the probe frame AND the probed-cell literal
@@ -227,22 +209,11 @@ def serve_topk(spark, index_dir: str, queries: DataFrame, id_col: str,
         [(r["_qid"], r["_cell"], r["_tbls"]) for r in probe_rows],
         "_qid long, _cell long, _tbls array<map<long,long>>",
     )
-    fs = IndexFS(spark, index_dir)
-    # pre-v2 compat, READ-ONLY: a legacy base build never touched
-    # _batch_-1 — overlay it into this read's committed view instead
-    # of silently serving nothing (serving tiers may lack write
-    # permission on the index root; the next writer stamps durably)
-    leaves = _leaf_batch_ids(fs)
-    overlay = legacy_overlay_ids(
-        fs, lambda: "-1" in leaves, lambda b: b in leaves
-    )
-    # committed ∩ leaves-that-exist: the predicate stays bounded by
-    # LIVE leaves (one generation + recent batches after compaction),
-    # not by how many redelivery markers have ever been written
-    committed = sorted(
-        int(b)
-        for b in (committed_batch_ids(fs) | overlay) & leaves
-    )
+    # committed ∩ live leaves, with a pre-v2 root's legacy base build
+    # overlaid READ-ONLY (serving tiers may lack write permission on
+    # the index root; the next writer stamps durably)
+    served = served_leaves(IndexFS(spark, index_dir), LAYOUT)["cells"]
+    committed = sorted(int(b) for b in served)
     inv = (
         spark.read.parquet(f"{index_dir}/cells")
         .filter(F.col("_cell").isin(probed))
@@ -368,86 +339,12 @@ def serve_current(spark, root_dir: str, queries: DataFrame, id_col: str,
                       round_digits=round_digits)
 
 
-def compact_cells(spark, index_dir: str, buckets: int = 1,
-                  marker_horizon: int = 1000) -> dict:
+def compact_cells(spark, index_dir: str) -> dict:
     """Merge the cells inventory's committed ``_batch`` leaves into a
-    single fresh negative GENERATION per cell — the IVF-PQ twin of
-    minhash_stream.compact_lsh_index, closing the small-files growth
-    of sustained streaming absorption (one ``(_cell, _batch)`` leaf
-    per micro-batch forever otherwise — VERDICT r6 ask #2).
-
-    Same rename-free journaled protocol (streaming/fsio docstring):
-    the compacted generation writes DIRECTLY into its final
-    ``_cell=*/_batch=<gen>`` leaves via dynamic partition overwrite
-    (invisible until committed — readers only trust marker/journal
-    batches), the ``_compact_commit`` journal is the atomic commit
-    point, and the idempotent apply deletes consumed leaves + retired
-    sentinel markers. Real batch markers survive so redelivered
-    pre-compaction batches still short-circuit. The committed
-    snapshot localCheckpoints before the rewrite (same-root read →
-    write); at cluster scale this staging lands on reliable storage.
-    Returns {'files_before', 'files_after', 'rows'}."""
-    from ..streaming.fsio import (
-        IndexFS,
-        committed_batch_ids,
-        count_committed_files,
-        drop_stale_generations,
-        ensure_protocol,
-        next_generation,
-        retire_real_markers,
-        write_journal,
-    )
-
-    fs = IndexFS(spark, index_dir)
-    _leaves0 = _leaf_batch_ids(fs)
-    ensure_protocol(fs, lambda: "-1" in _leaves0,
-                    lambda b: b in _leaves0)
-    _recover_cells(fs)
-    # reclaim half-written generations from a pre-commit crash
-    stale = sorted(
-        int(b) for b in _leaf_batch_ids(fs) if int(b) < 0
-    )
-    drop_stale_generations(fs, _delete_cells_batches, stale)
-    committed = committed_batch_ids(fs) & _leaf_batch_ids(fs)
-    before = fs.count_files("cells")
-    if not committed:
-        return {"files_before": before, "files_after": before, "rows": 0}
-    inv = (
-        spark.read.parquet(fs.uri("cells"))
-        .filter(
-            F.col("_batch").cast("string").isin(sorted(committed))
-        )
-        .select("_id", "_codes", F.col("_cell").cast("long").alias("_cell"))
-        .repartition(buckets, "_cell")
-        .localCheckpoint()
-    )
-    # observe the row count inside the generation write instead of a
-    # separate count() job over the checkpointed snapshot (guide §1.2)
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    inv = inv.observe(obs, F.count(F.lit(1)).alias("rows"))
-    gen = next_generation(fs)
-    # inv is already bucket-clustered by _cell — no second shuffle
-    write_cells(inv, fs.uri("cells"), gen, distribute=False)
-    rows = obs.get["rows"]
-    write_journal(fs, gen, sorted(committed))  # the atomic commit point
-    _recover_cells(fs)  # apply via the shared idempotent path
-    # every committed real batch is now absorbed — retire markers far
-    # behind the redelivery horizon so root metadata stays bounded
-    retire_real_markers(fs, marker_horizon)
-    # files_after is the COMMITTED view (what every new reader opens):
-    # consumed leaves' data survives one tombstone grace cycle for
-    # in-flight scans and is purged at the next compaction's apply
-    committed_now = committed_batch_ids(fs)
-    after = sum(
-        count_committed_files(fs, f"cells/{cd}", prefix="_batch=",
-                              committed=committed_now)
-        for cd in fs.listdir("cells")
-        if cd.startswith("_cell=")
-    )
-    return {
-        "files_before": before,
-        "files_after": after,
-        "rows": rows,
-    }
+    single fresh negative GENERATION per cell — the shared journaled
+    compactor (``streaming/batched_index.compact_batched_index``) on
+    :data:`LAYOUT`, closing the small-files growth of sustained
+    streaming absorption (one ``(_cell, _batch)`` leaf per micro-batch
+    forever otherwise). Returns {'files_before', 'files_after',
+    'rows'}."""
+    return compact_batched_index(spark, index_dir, LAYOUT)

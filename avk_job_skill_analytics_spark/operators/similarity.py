@@ -644,11 +644,13 @@ def band_sig_structs_np(vec_col: str, dim: int, bands: int,
     whose pairwise summation would reorder the additions), so every
     rounding step matches and every sign bit agrees (verified exactly
     over the sf0.1 corpus). NULL
-    vectors and length-mismatched vectors sign to 0 for every band,
-    exactly like the expression (null-propagated dots fail the
-    ``> 0`` test); a NULL ELEMENT inside a vector also signs to 0 —
-    the one divergence is a literal NaN element (Spark orders NaN
-    above zero), which the embeddings contract excludes."""
+    vectors, length-mismatched vectors and vectors with a NULL
+    ELEMENT sign to 0 for every band, exactly like the expression
+    (null-propagated dots fail the ``> 0`` test). A NaN element, which
+    the embeddings contract excludes, raises a ValueError naming the
+    column instead of being signed: Spark orders NaN above zero, so
+    the two spellings would disagree on it. Arrow hands a NULL element
+    to Python as NaN too, so the NULL test runs in Spark."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -664,16 +666,19 @@ def band_sig_structs_np(vec_col: str, dim: int, bands: int,
         T.StructField("sig", T.LongType()),
     ]))
 
-    def _sigs(vec):
+    def _sigs(vec, has_null):
         n = len(vec)
         V = np.zeros((n, dim))
         ok = np.zeros(n, dtype=bool)
-        for j, v in enumerate(vec):
-            if v is None or len(v) != dim:
+        for j, (v, nul) in enumerate(zip(vec, has_null)):
+            if v is None or len(v) != dim or nul:
                 continue
             a = np.asarray(v, dtype=np.float64)
             if np.isnan(a).any():
-                continue
+                raise ValueError(
+                    f"band_sig_structs_np: column {vec_col!r} holds a "
+                    "NaN element; embeddings must be finite"
+                )
             V[j] = a
             ok[j] = True
         # exact products folded LEFT-TO-RIGHT from 0.0 — the same IEEE
@@ -694,8 +699,11 @@ def band_sig_structs_np(vec_col: str, dim: int, bands: int,
 
     # annotations as REAL objects: pandas is imported locally, so
     # string hints would not resolve during pandas_udf introspection
-    _sigs.__annotations__ = {"vec": pd.Series, "return": pd.Series}
-    return F.pandas_udf(ret)(_sigs)(F.col(vec_col))
+    _sigs.__annotations__ = {"vec": pd.Series, "has_null": pd.Series,
+                             "return": pd.Series}
+    return F.pandas_udf(ret)(_sigs)(
+        F.col(vec_col), F.exists(F.col(vec_col), lambda x: x.isNull())
+    )
 
 
 def band_sig_structs(vec_col: str, dim: int, bands: int,

@@ -840,11 +840,12 @@ _IVFPQ_AC_DIRS: dict = FixtureMemo()
 @_q("stream_ivfpq_autocompact", _ivfpq_append_sql())
 def stream_ivfpq_autocompact(spark, sf_dir):
     """Self-compacting incremental IVF-PQ index
-    (ann_maintain compact_every + operators/ann_index.compact_cells):
+    (ann_maintain compact_every: streaming/batched_index's batched_sink
+    and compact_batched_index on the cells layout):
     the odd vec_ids arrive as FOUR micro-batches on a fresh even-id
     base, and the sink itself compacts the (_cell, _batch) leaves
     whenever two committed real batches have accumulated — two
-    journaled, rename-free compactions run inside the drain with no
+    journaled compactions run inside the drain with no
     operator call. Serving from the compacted generations must
     hash-match the SAME one-shot oracle as the append query: the
     driver-gate proof that compaction is lossless and the leaf count

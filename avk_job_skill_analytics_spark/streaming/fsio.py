@@ -1,5 +1,8 @@
 """Hadoop-FileSystem I/O + the shared exactly-once commit protocol
-for the growing streaming indexes (LSH bands/sets, IVF-PQ cells).
+for the growing streaming indexes — every ``streaming/batched_index``
+layout (LSH bands/sets, BM25 postings, NB counts, logreg states,
+embedding bands, prefix postings, IVF-PQ cells, the auto-retrain raw
+arrivals log), which is the only caller of the protocol steps below.
 
 Why not ``os.*``: on a real cluster the index directory lives on the
 CLUSTER filesystem (``hdfs://``, ``s3a://``, ``abfs://``) — the
@@ -61,10 +64,15 @@ Commit protocol — rename-free for data (VERDICT r6 ask #1):
   an unmarkered negative generation is what the v2 protocol says it
   is: pre-commit garbage.
 
-The only rename anywhere is the tmp→final swap of the journal file
+The protocol's only rename is the tmp→final swap of the journal file
 itself: atomic on HDFS/POSIX; on S3A the copy half is one atomic PUT,
-so a reader sees the whole journal or none of it. Data directories
-are never renamed.
+so a reader sees the whole journal or none of it. No commit point is
+a data-directory rename. The layouts written by dynamic partition
+overwrite (IVF-PQ cells, the raw log) do pass through Spark's own
+staging: the job writes under ``.spark-staging-<job>`` and renames
+its finished leaves into place at job commit. Those leaves stay
+invisible until their marker or journal lands, so that rename (a
+copy on object stores) is never what makes data visible.
 """
 
 from __future__ import annotations

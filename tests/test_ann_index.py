@@ -8,12 +8,18 @@ from pyspark.sql import functions as F
 
 from avk_job_skill_analytics_spark.operators import ann_index
 from avk_job_skill_analytics_spark.streaming.ann_maintain import (
+    RAW_LAYOUT,
     _ivfpq_append_batch_fn,
+)
+from avk_job_skill_analytics_spark.streaming.batched_index import (
+    leaves,
+    make_delete_batches,
 )
 from avk_job_skill_analytics_spark.streaming.fsio import (
     IndexFS,
     committed_batch_ids,
     read_journal,
+    recover_compaction,
     write_journal,
 )
 
@@ -47,13 +53,11 @@ def _served(spark, d: str, n_probe: int = 2):
 
 
 def _leaf_ids(fs) -> set[str]:
-    return {
-        name.split("=", 1)[1]
-        for cd in fs.listdir("cells")
-        if cd.startswith("_cell=")
-        for name in fs.listdir(f"cells/{cd}")
-        if name.startswith("_batch=")
-    }
+    return set(leaves(fs, ann_index.LAYOUT)["cells"])
+
+
+def _raw_leaf_ids(fs) -> set[str]:
+    return set(leaves(fs, RAW_LAYOUT)["raw"])
 
 
 def test_cells_compaction_preserves_serving(spark, tmp_path):
@@ -128,9 +132,10 @@ def test_cells_compaction_recovers_from_mid_apply_crash(spark, tmp_path):
     ann_index.write_cells(inv, fs.uri("cells"), -3)
     write_journal(fs, -3, ["-2", "2"])
     fs.touch("_batch_-3")
-    ann_index._delete_cells_batches(fs, ["-2"])
+    delete_batches = make_delete_batches(ann_index.LAYOUT)
+    delete_batches(fs, ["-2"])
     assert _served(spark, d) == served  # journal overlay: view whole
-    ann_index._recover_cells(fs)
+    recover_compaction(fs, delete_batches)
     assert read_journal(fs) is None
     # committed view is exactly the fresh generation; batch 2's data
     # is tombstoned (one grace cycle), the first cycle's tombstones
@@ -140,7 +145,7 @@ def test_cells_compaction_recovers_from_mid_apply_crash(spark, tmp_path):
     assert not fs.exists("_batch_-2")
     assert _served(spark, d) == served
     # double recovery is a no-op, not data loss
-    ann_index._recover_cells(fs)
+    recover_compaction(fs, delete_batches)
     assert _served(spark, d) == served
 
 
@@ -383,7 +388,6 @@ def test_auto_retrain_policy_and_crash_windows(spark, tmp_path):
     # committed leaves fold into one generation, the retrain corpus
     # read is unchanged, and a re-run is a no-op
     from avk_job_skill_analytics_spark.streaming.ann_maintain import (
-        _raw_leaf_ids,
         compact_raw_log,
     )
     from avk_job_skill_analytics_spark.streaming.fsio import (
@@ -409,3 +413,63 @@ def test_auto_retrain_policy_and_crash_windows(spark, tmp_path):
     again = compact_raw_log(spark, root, "vec_id", "embedding")
     assert again["rows"] == 0  # single committed generation: no-op
     assert serve() == served  # serving untouched by log maintenance
+
+
+def test_raw_log_compaction_retires_old_markers(spark, tmp_path,
+                                                monkeypatch):
+    """The auto-retrain root's redelivery markers are bounded like
+    every other layout's: each raw-log compaction (the retrain's
+    in-sink one and a direct one) retires real markers more than
+    ``MARKER_HORIZON`` behind the newest, while a redelivered recent
+    batch still short-circuits and the committed raw log is intact."""
+    import os
+
+    from avk_job_skill_analytics_spark.streaming import batched_index
+    from avk_job_skill_analytics_spark.streaming.ann_maintain import (
+        _auto_retrain_batch_fn,
+        compact_raw_log,
+    )
+
+    monkeypatch.setattr(batched_index, "MARKER_HORIZON", 1)
+    e2 = _shifted(spark.read.parquet(EMB))
+    base = e2.filter(F.col("vec_id") % 4 == 0)
+    root = str(tmp_path / "aroot")
+    ann_index.rebuild_swap(spark, root, base, "vec_id", "embedding")
+    sink = _auto_retrain_batch_fn(root, base, "vec_id", "embedding")
+    fs = IndexFS(spark, root)
+    calm = [e2.filter(F.col("vec_id") % 8 == r) for r in (1, 5, 3)]
+    sink(calm[0], 0)
+    sink(calm[1], 1)
+    sink(e2.filter(F.col("vec_id") % 4 == 2), 2)  # drifted: retrains
+    assert ann_index.resolve_version(fs) == 1
+    sink(calm[2], 3)
+    assert ann_index.resolve_version(fs) == 1
+
+    def raw_ids():
+        com = committed_batch_ids(fs) & _raw_leaf_ids(fs)
+        return sorted(
+            r["vec_id"]
+            for r in spark.read.parquet(fs.uri("raw"))
+            .filter(F.col("_rbatch").cast("string").isin(sorted(com)))
+            .select("vec_id").collect()
+        )
+
+    ids = raw_ids()
+    compact_raw_log(spark, root, "vec_id", "embedding")
+    markers = sorted(n for n in os.listdir(root) if n.startswith("_batch_"))
+    # the retrain folded batches 0 and 1 into generation -1; this
+    # compaction folds -1, 2 and 3 into -2 and retires ids 0 and 1
+    assert markers == ["_batch_-2", "_batch_2", "_batch_3"], markers
+    assert committed_batch_ids(fs) & _raw_leaf_ids(fs) == {"-2"}
+    assert raw_ids() == ids
+    # the newest batch's redelivery still short-circuits: no file moves
+    before = {
+        os.path.join(r, n): os.stat(os.path.join(r, n)).st_mtime_ns
+        for r, ds, fs_ in os.walk(root) for n in ds + fs_
+    }
+    sink(calm[2], 3)
+    after = {
+        os.path.join(r, n): os.stat(os.path.join(r, n)).st_mtime_ns
+        for r, ds, fs_ in os.walk(root) for n in ds + fs_
+    }
+    assert after == before

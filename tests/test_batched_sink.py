@@ -1,7 +1,9 @@
 """The commit protocol of ``batched_index.batched_sink``, locked once
-for all six growing-index families: a redelivered committed batch
-changes no file, and ``compact_every=2`` folds two batches into
-exactly one committed generation without changing the served view."""
+for every growing-index layout: a redelivered committed batch changes
+no file, ``compact_every=2`` folds two batches into exactly one
+committed generation without changing the served view, and a crash
+at any step of ``compact_batched_index`` is recovered by the next
+sink call."""
 
 from __future__ import annotations
 
@@ -11,7 +13,13 @@ from typing import Callable
 
 import pytest
 
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from avk_job_skill_analytics_spark.operators import ann_index
 from avk_job_skill_analytics_spark.streaming import (
+    ann_maintain,
+    batched_index,
     classify_stream,
     lexical_stream,
     linear_stream,
@@ -21,19 +29,29 @@ from avk_job_skill_analytics_spark.streaming import (
 )
 from avk_job_skill_analytics_spark.streaming.batched_index import (
     committed_table_dirs,
+    compact_batched_index,
+    leaves,
+    served_table_dirs,
 )
-from avk_job_skill_analytics_spark.streaming.fsio import IndexFS
+from avk_job_skill_analytics_spark.streaming.fsio import (
+    IndexFS,
+    committed_batch_ids,
+    read_journal,
+)
 
 T = "the quick brown fox jumps over the lazy dog again and again"
 DOCS = "doc_id long, text string"
+EMB = "/root/testdata/sf0.001/embeddings.parquet"
 
 
 @dataclass
 class Family:
-    module: object
+    layout: dict
     make: Callable      # (index_dir, compact_every) -> sink
     batches: Callable   # spark -> [batch 0 frame, batch 1 frame]
     serve: Callable     # (spark, index_dir) -> sorted served rows
+    setup: Callable | None = None  # (spark, index_dir): the base build
+    generation: str = "-1"  # the first compaction's generation id
 
 
 def _rows(df):
@@ -57,6 +75,43 @@ def _index_view(module):
     return serve
 
 
+def _emb(*classes):
+    """One embeddings frame per ``(mod, rem)`` residue class of vec_id."""
+    return lambda spark: [
+        spark.read.parquet(EMB).filter(F.col("vec_id") % mod == rem)
+        for mod, rem in classes
+    ]
+
+
+def _ivfpq_base(spark, d):
+    e = spark.read.parquet(EMB)
+    ann_index.build_index(
+        spark, e.filter(F.col("vec_id") % 2 == 0), "vec_id", "embedding", d
+    )
+
+
+def _ivfpq_serve(spark, d):
+    q = spark.read.parquet(EMB).filter(F.col("vec_id") < 10)
+    return _rows(ann_index.serve_topk(
+        spark, d, q, "vec_id", "embedding", n_probe=2, sub_d=8, k=5))
+
+
+def _retrain_base(spark):
+    return spark.read.parquet(EMB).filter(F.col("vec_id") % 4 == 0)
+
+
+def _raw_view(spark, d):
+    """The auto-retrain root's committed raw log plus what it serves."""
+    fs = IndexFS(spark, d)
+    q = spark.read.parquet(EMB).filter(F.col("vec_id") < 10)
+    return [
+        _rows(spark.read.parquet(*served_table_dirs(
+            fs, ann_maintain.RAW_LAYOUT)["raw"])),
+        _rows(ann_index.serve_current(
+            spark, d, q, "vec_id", "embedding", n_probe=2, sub_d=8, k=5)),
+    ]
+
+
 def _docs(*batches):
     return lambda spark: [spark.createDataFrame(b, DOCS) for b in batches]
 
@@ -69,7 +124,7 @@ def _vec(seed: float, flip: int = 0) -> list:
 
 FAMILIES = {
     "lsh": Family(
-        minhash_stream,
+        minhash_stream.LAYOUT,
         lambda d, ce: minhash_stream._lsh_maintain_batch_fn(
             d, "doc_id", "text", 3, 16, 8, 0.5, 7, compact_every=ce),
         _docs([(1, T), (2, "other words about engines entirely")],
@@ -77,7 +132,7 @@ FAMILIES = {
         _index_view(minhash_stream),
     ),
     "bm25": Family(
-        lexical_stream,
+        lexical_stream.LAYOUT,
         lambda d, ce: lexical_stream._bm25_maintain_batch_fn(
             d, "doc_id", "text", compact_every=ce),
         _docs([(1, "spark shuffle join spark"), (2, "pad pad spark")],
@@ -86,7 +141,7 @@ FAMILIES = {
             spark, d, ["spark", "pad"], "doc_id", k=10)),
     ),
     "nb": Family(
-        classify_stream,
+        classify_stream.LAYOUT,
         lambda d, ce: classify_stream._nb_train_batch_fn(
             d, "doc_id", "text", "y", compact_every=ce),
         lambda spark: [
@@ -100,7 +155,7 @@ FAMILIES = {
         lambda spark, d: _rows(classify_stream.serve_nb_weights(spark, d)),
     ),
     "logreg": Family(
-        linear_stream,
+        linear_stream.LAYOUT,
         lambda d, ce: linear_stream._logreg_train_batch_fn(
             d, ["x0", "x1"], "y", 1.0, 2.0, compact_every=ce),
         lambda spark: [
@@ -114,7 +169,7 @@ FAMILIES = {
             spark, d, ["w_bias", "w_x"])),
     ),
     "semantic": Family(
-        semantic_stream,
+        semantic_stream.LAYOUT,
         lambda d, ce: semantic_stream._semantic_maintain_batch_fn(
             d, "vec_id", "embedding", 8, bands=2, rows_per_band=4,
             threshold=0.9, compact_every=ce),
@@ -129,12 +184,37 @@ FAMILIES = {
         _index_view(semantic_stream),
     ),
     "ssjoin": Family(
-        ssjoin_stream,
+        ssjoin_stream.LAYOUT,
         lambda d, ce: ssjoin_stream._ssjoin_maintain_batch_fn(
             d, "doc_id", "text", 3, 1, 2, compact_every=ce),
         _docs([(1, T), (2, "unrelated words entirely about other topics")],
               [(3, T + " tail")]),
         _index_view(ssjoin_stream),
+    ),
+    "ivfpq": Family(
+        ann_index.LAYOUT,
+        lambda d, ce: ann_maintain._ivfpq_append_batch_fn(
+            d, "vec_id", "embedding", 8, 8, compact_every=ce),
+        _emb((4, 1), (4, 3)),
+        _ivfpq_serve,
+        setup=_ivfpq_base,
+        generation="-2",  # the base build holds -1
+    ),
+}
+
+# every layout, including the auto-retrain raw log, whose sink takes
+# no compact_every (the crash test drives the compactor directly)
+LAYOUTS = {
+    **FAMILIES,
+    "raw": Family(
+        ann_maintain.RAW_LAYOUT,
+        lambda d, ce: ann_maintain._auto_retrain_batch_fn(
+            d, _retrain_base(SparkSession.getActiveSession()), "vec_id",
+            "embedding"),
+        _emb((8, 1), (8, 3)),
+        _raw_view,
+        setup=lambda spark, d: ann_index.rebuild_swap(
+            spark, d, _retrain_base(spark), "vec_id", "embedding"),
     ),
 }
 
@@ -152,6 +232,8 @@ def _tree(d: str) -> dict:
 
 def _drain(spark, fam: Family, d: str, compact_every):
     os.makedirs(d)
+    if fam.setup is not None:
+        fam.setup(spark, d)
     sink = fam.make(d, compact_every)
     batches = fam.batches(spark)
     for i, b in enumerate(batches):
@@ -179,12 +261,74 @@ def test_compact_every_two_leaves_one_generation(spark, tmp_path, name):
     _drain(spark, fam, plain, None)
     sink, batches = _drain(spark, fam, auto, 2)
     fs = IndexFS(spark, auto)
-    for table in fam.module.LAYOUT:
-        ids = [p.rsplit("=", 1)[1]
-               for p in committed_table_dirs(fs, table)]
-        assert ids == ["-1"], (table, ids)
+    committed = committed_batch_ids(fs)
+    for table, by_id in leaves(fs, fam.layout, committed).items():
+        assert list(by_id) == [fam.generation], (table, list(by_id))
     assert fam.serve(spark, auto) == fam.serve(spark, plain)
     # a batch absorbed into the generation still short-circuits
     before = _tree(auto)
     sink(batches[0], 0)
     assert _tree(auto) == before
+
+
+class Crash(Exception):
+    pass
+
+
+def _arm(monkeypatch, point: str) -> None:
+    """Make the next compaction raise at ``point``: after the
+    generation write and before the journal publish; after the
+    publish and before apply; or mid-apply, right after the first
+    leaf delete (the previous cycle's tombstone purge)."""
+    publish = batched_index.write_journal
+    delete = IndexFS.delete
+
+    def crash_after_delete(self, rel):
+        delete(self, rel)
+        raise Crash(point)
+
+    def write_journal(fs, gen, consumed):
+        if point == "before_journal":
+            raise Crash(point)
+        publish(fs, gen, consumed)
+        if point == "before_apply":
+            raise Crash(point)
+        monkeypatch.setattr(IndexFS, "delete", crash_after_delete)
+
+    monkeypatch.setattr(batched_index, "write_journal", write_journal)
+
+
+@pytest.mark.parametrize("name", list(LAYOUTS))
+def test_compactor_crash_recovers_on_next_sink_call(spark, tmp_path,
+                                                    monkeypatch, name):
+    """A compaction that crashes at any step of
+    ``compact_batched_index`` is finished by the next sink call: the
+    served view then matches an uncrashed twin's, and so does the view
+    after one more clean compaction of both roots."""
+    fam = LAYOUTS[name]
+    roots = {k: str(tmp_path / k) for k in ("twin", "crashed")}
+    sinks = [_drain(spark, fam, d, None)[0] for d in roots.values()]
+    frames = fam.batches(spark) * 2
+
+    def feed(batch_id):
+        for sink in sinks:
+            sink(frames[batch_id - 2], batch_id)
+
+    for d in roots.values():
+        compact_batched_index(spark, d, fam.layout)  # the first cycle
+    feed(2)
+    points = ("before_journal", "before_apply", "mid_apply")
+    for batch_id, point in enumerate(points, start=3):
+        compact_batched_index(spark, roots["twin"], fam.layout)
+        _arm(monkeypatch, point)
+        with pytest.raises(Crash):
+            compact_batched_index(spark, roots["crashed"], fam.layout)
+        monkeypatch.undo()
+        feed(batch_id)  # the next sink call recovers
+        assert read_journal(IndexFS(spark, roots["crashed"])) is None
+        assert (fam.serve(spark, roots["crashed"])
+                == fam.serve(spark, roots["twin"])), point
+    for d in roots.values():
+        compact_batched_index(spark, d, fam.layout)
+    assert (fam.serve(spark, roots["crashed"])
+            == fam.serve(spark, roots["twin"]))

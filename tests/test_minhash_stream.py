@@ -366,7 +366,7 @@ def test_lsh_second_compaction_crash_window_preserves_index(
     s.localCheckpoint().write.parquet(f"{d}/sets/batch=-2")
     write_journal(fs, -2, ["-1", "1"])
     fs.touch("_batch_-2")
-    delete_batches = make_delete_batches(tuple(LAYOUT))
+    delete_batches = make_delete_batches(LAYOUT)
     delete_batches(fs, ["-1"])   # partial apply, then "crash"
     assert rows() == expected    # journal overlay keeps the view whole
     recover_compaction(fs, delete_batches)  # any later caller finishes it

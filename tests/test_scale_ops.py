@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from avk_job_skill_analytics_spark.operators import analytics as A
@@ -2121,3 +2122,28 @@ def test_band_sig_structs_np_matches_expression(spark):
         da = {r.vec_id: [(x.band, x.sig) for x in r.s] for r in a}
         db = {r.vec_id: [(x.band, x.sig) for x in r.s] for r in b}
         assert da == db, f"bands={bands} rpb={rpb}"
+
+
+def test_band_sig_structs_np_rejects_nan_element(spark):
+    """A NaN element has no expression-equal signature (Spark orders
+    NaN above zero), so the vectorized banding raises a ValueError
+    naming the column instead of signing it to 0; a NULL element —
+    which reaches NumPy as NaN too — still signs to 0 like the
+    expression."""
+    from pyspark.errors import PythonException
+
+    nulls = spark.createDataFrame(
+        [(1, [1.0, None] + [0.5] * 14)], "vec_id long, v array<double>"
+    )
+    for fn in (similarity.band_sig_structs, similarity.band_sig_structs_np):
+        (row,) = nulls.select(fn("v", 16, 4, 4).alias("s")).collect()
+        assert [x.sig for x in row.s] == [0, 0, 0, 0]
+    nan = spark.createDataFrame(
+        [(1, [1.0, float("nan")] + [0.5] * 14)],
+        "vec_id long, emb array<double>",
+    )
+    with pytest.raises(PythonException,
+                       match=r"ValueError: .*'emb' holds a NaN element"):
+        nan.select(
+            similarity.band_sig_structs_np("emb", 16, 4, 4)
+        ).collect()
